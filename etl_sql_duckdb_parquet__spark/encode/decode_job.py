@@ -1,12 +1,13 @@
 """Decode path: blobs → token table, bit-identical (the north-rule invariant).
 
-Reads the manifest to pick, per partition, the latest successful run (so
-orphaned blob files from a crashed run can never leak into results), joins
-the blob table on (part_id, run_id), and reverses every codec inside an
-Arrow-native ``mapInArrow``.  The token lists are assembled ZERO-COPY with
-``pa.ListArray.from_arrays(offsets, values)`` — no per-document
-``np.split``/pandas-object materialization, which dominated decode time at
-many-docs scale (tens of thousands of small docs per partition).
+Every call reads the manifest's rows once on the driver and picks, in plain
+Python, the snapshot set and the latest successful run per partition (so
+orphaned blob files from a crashed run can never leak into results); the
+blob scan is then filtered to exactly those (run_id, part_id) pairs, and
+every codec is reversed inside an Arrow-native ``mapInArrow``.  The token
+lists are assembled ZERO-COPY with ``pa.ListArray.from_arrays(offsets,
+values)`` — no per-document ``np.split``/pandas-object materialization.
+Point lookups replay the persisted plan on the driver the same way.
 Verification is a distributed join on doc_id with null-safe array
 equality — no driver-side collection.
 """
@@ -15,11 +16,18 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..codecs import decode_int, decode_strings
-from .manifest import blobs_path, plan_path, read_manifest
+from .encode_job import ENCODED_SCHEMA
+from .manifest import (
+    PLAN_SCHEMA,
+    blobs_path,
+    plan_path,
+    read_manifest,
+    read_parquet_or_none,
+)
 
 DECODED_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 
@@ -101,6 +109,77 @@ def _make_decoder(columns: list[str]):
     return _decode_batches
 
 
+def _snapshot_rows(
+    spark: SparkSession, out_dir: str, snapshots: str
+) -> list:
+    """The ok manifest rows of the selected snapshots — ONE driver-side
+    manifest read.  THE snapshot-arg resolution, shared by every
+    decode-side entry (blob winners and the lookup coverage check) so the
+    coverage check can never validate a different snapshot set than the
+    one the decode reads.  Validates the argument and, for an explicit
+    ``snap_`` id, its existence — a typo'd id must raise here, not surface
+    downstream as a misleading missing-plan or backfill error.
+    """
+    manifest = read_manifest(spark, out_dir)
+    if manifest is None:
+        raise FileNotFoundError(f"no manifest under {out_dir}")
+    ok = [r for r in manifest.collect() if r["status"] == "ok"]
+    if not ok:
+        raise ValueError(
+            f"manifest under {out_dir} has no status='ok' rows — "
+            "nothing to decode (all runs failed or were aborted)"
+        )
+    if snapshots == "all":
+        return ok
+    if snapshots == "latest":
+        snap = max(ok, key=lambda r: (r["finished_at"], r["run_id"]))
+        snapshots = snap["snapshot_id"]
+    elif not (isinstance(snapshots, str) and snapshots.startswith("snap_")):
+        raise ValueError(
+            "snapshots must be 'latest', 'all', or an explicit "
+            f"'snap_...' id: {snapshots!r}"
+        )
+    rows = [r for r in ok if r["snapshot_id"] == snapshots]
+    if not rows:
+        raise ValueError(
+            f"snapshot {snapshots!r} has no status='ok' manifest rows "
+            f"under {out_dir}"
+        )
+    return rows
+
+
+def _winners(rows: list) -> set[tuple[str, int]]:
+    """``(run_id, part_id)`` of the latest ok run per (snapshot, part), so
+    a resumed/re-run snapshot still dedupes exactly."""
+    latest_last = sorted(rows, key=lambda r: (r["finished_at"], r["run_id"]))
+    return set(
+        {
+            (r["snapshot_id"], r["part_id"]): (r["run_id"], r["part_id"])
+            for r in latest_last
+        }.values()
+    )
+
+
+def _blob_scan(
+    spark: SparkSession, out_dir: str, pairs: set[tuple[str, int]]
+) -> DataFrame:
+    """The blob table filtered to exactly ``pairs`` — orphaned blob files
+    from a crashed run can never leak into results.  Every conjunct is a
+    flat IN list (run_id prunes directories, part_id prunes row groups,
+    the pair key is exact); a per-run OR chain would nest one Catalyst
+    level per run and overflow on stores with ~1,000 runs."""
+    pair_key = F.concat_ws(":", "run_id", F.col("part_id").cast("string"))
+    return (
+        spark.read.schema(f"{ENCODED_SCHEMA}, run_id string")
+        .parquet(blobs_path(out_dir))
+        .filter(
+            F.col("run_id").isin(sorted({r for r, _ in pairs}))
+            & F.col("part_id").isin(sorted({p for _, p in pairs}))
+            & pair_key.isin(sorted(f"{r}:{p}" for r, p in pairs))
+        )
+    )
+
+
 def winning_blobs(
     spark: SparkSession, out_dir: str, snapshots: str = "latest"
 ) -> DataFrame:
@@ -120,18 +199,38 @@ def winning_blobs(
     Within a snapshot, the winner per part_id is the latest OK run, so a
     resumed/re-run snapshot still dedupes exactly.
     """
-    ok, _ = _resolve_snapshots(spark, out_dir, snapshots)
-    w = Window.partitionBy("snapshot_id", "part_id").orderBy(
-        F.desc("finished_at"), F.desc("run_id")
-    )
-    winners = (
-        ok.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("part_id", "run_id")
-        .distinct()
-    )
-    blobs = spark.read.parquet(blobs_path(out_dir))
-    return blobs.join(F.broadcast(winners), ["part_id", "run_id"], "inner")
+    rows = _snapshot_rows(spark, out_dir, snapshots)
+    return _blob_scan(spark, out_dir, _winners(rows))
+
+
+def _decode_columns(columns: list[str] | None) -> tuple[list[str], list[str]]:
+    """(logical columns, blob columns they need) — validated."""
+    cols = list(_COLUMN_TYPES) if columns is None else list(columns)
+    unknown = set(cols) - set(_COLUMN_TYPES)
+    if unknown:
+        raise ValueError(
+            f"unknown decode columns {sorted(unknown)}; "
+            f"available: {list(_COLUMN_TYPES)}"
+        )
+    return cols, list(dict.fromkeys(b for c in cols for b in _BLOB_DEPS[c]))
+
+
+def _decode(
+    spark: SparkSession,
+    out_dir: str,
+    rows: list,
+    columns: list[str] | None,
+    parts: list[int] | None = None,
+) -> DataFrame:
+    """Decode the winning blobs of ``rows`` (already-selected ok rows)."""
+    cols, needed = _decode_columns(columns)
+    pairs = _winners(rows)
+    if parts is not None:
+        wanted = {int(p) for p in parts}
+        pairs = {(r, p) for r, p in pairs if p in wanted}
+    schema = ", ".join(f"{c} {_COLUMN_TYPES[c][0]}" for c in cols)
+    blobs = _blob_scan(spark, out_dir, pairs).select(*needed)
+    return blobs.mapInArrow(_make_decoder(cols), schema)
 
 
 def decode_token_table(
@@ -149,89 +248,61 @@ def decode_token_table(
     column pruning) nor decompresses the token blobs, which are ~95% of
     the store's bytes.  The same reason column stores win the reference's
     CSV-vs-Parquet benchmark (``/root/reference/docs/benchmark_results.md``)
-    applied to our own format.
+    applied to our own format.  ``parts`` restricts the decode to those
+    part ids (partition pruning on the blob scan).
     """
-    cols = list(_COLUMN_TYPES) if columns is None else list(columns)
-    unknown = set(cols) - set(_COLUMN_TYPES)
-    if unknown:
-        raise ValueError(
-            f"unknown decode columns {sorted(unknown)}; "
-            f"available: {list(_COLUMN_TYPES)}"
-        )
-    needed = []
-    for c in cols:
-        for b in _BLOB_DEPS[c]:
-            if b not in needed:
-                needed.append(b)
-    schema = ", ".join(f"{c} {_COLUMN_TYPES[c][0]}" for c in cols)
-    blobs = winning_blobs(spark, out_dir, snapshots)
-    if parts is not None:
-        # partition pruning: the IN filter pushes through the winners
-        # join to the blob scan (parquet row-group stats skip the rest)
-        blobs = blobs.filter(F.col("part_id").isin([int(p) for p in parts]))
-    return blobs.select(*needed).mapInArrow(_make_decoder(cols), schema)
-
-
-def _resolve_snapshots(
-    spark: SparkSession, out_dir: str, snapshots: str
-) -> tuple[DataFrame, set[str] | None]:
-    """THE snapshot-arg resolution, shared by every decode-side entry
-    (``winning_blobs`` and the lookup coverage check) so the coverage
-    check can never validate a different snapshot set than the one the
-    decode actually reads.
-
-    Returns (ok manifest rows filtered to the selection, the selected
-    snapshot-id set — or ``None`` for ``"all"``, whose materialization is
-    a Spark job the winning-blobs path doesn't need).  Validates the
-    argument and, for an explicit ``snap_`` id, its existence — a typo'd
-    id must raise here, not surface downstream as a misleading
-    missing-plan/backfill error.
-    """
-    manifest = read_manifest(spark, out_dir)
-    if manifest is None:
-        raise FileNotFoundError(f"no manifest under {out_dir}")
-    ok = manifest.filter(F.col("status") == "ok")
-    if snapshots == "latest":
-        latest = (
-            ok.orderBy(F.desc("finished_at"), F.desc("run_id"))
-            .select("snapshot_id")
-            .first()
-        )
-        if latest is None:
-            raise ValueError(
-                f"manifest under {out_dir} has no status='ok' rows — "
-                "nothing to decode (all runs failed or were aborted)"
-            )
-        snap = latest["snapshot_id"]
-        return ok.filter(F.col("snapshot_id") == snap), {snap}
-    if snapshots.startswith("snap_"):
-        ok = ok.filter(F.col("snapshot_id") == snapshots)
-        if ok.select("part_id").first() is None:
-            raise ValueError(
-                f"snapshot {snapshots!r} has no status='ok' manifest rows "
-                f"under {out_dir}"
-            )
-        return ok, {snapshots}
-    if snapshots != "all":
-        raise ValueError(
-            "snapshots must be 'latest', 'all', or an explicit "
-            f"'snap_...' id: {snapshots!r}"
-        )
-    return ok, None
+    rows = _snapshot_rows(spark, out_dir, snapshots)
+    return _decode(spark, out_dir, rows, columns, parts)
 
 
 def _decoded_snapshot_ids(
     spark: SparkSession, out_dir: str, snapshots: str
 ) -> set[str]:
-    """The ok snapshot ids a decode with this ``snapshots`` arg will read
-    (same resolution rules as :func:`winning_blobs` — shared resolver)."""
-    ok, snap_ids = _resolve_snapshots(spark, out_dir, snapshots)
-    if snap_ids is not None:
-        return snap_ids
-    return {
-        r["snapshot_id"]
-        for r in ok.select("snapshot_id").distinct().collect()
-    }
+    """The ok snapshot ids a decode with this ``snapshots`` arg reads."""
+    rows = _snapshot_rows(spark, out_dir, snapshots)
+    return {r["snapshot_id"] for r in rows}
+
+
+def _candidates(
+    spark: SparkSession,
+    out_dir: str,
+    rows: list,
+    doc_ids: list[str],
+    source: str | None,
+) -> list[int]:
+    """Candidate part ids for ``doc_ids`` over the snapshots of ``rows``,
+    from one driver-side plan read."""
+    plan = read_parquet_or_none(spark, plan_path(out_dir), PLAN_SCHEMA)
+    if plan is None:
+        raise FileNotFoundError(
+            f"no partition plan under {out_dir} — the store predates "
+            "lookup support; re-encode with --no-resume (a resumed no-op "
+            "run also backfills the plan), or decode fully and filter"
+        )
+    snaps = {r["snapshot_id"] for r in rows}
+    plan = [p for p in plan.collect() if p["snapshot_id"] in snaps]
+    uncovered = sorted(snaps - {p["snapshot_id"] for p in plan})
+    if uncovered:
+        raise FileNotFoundError(
+            f"snapshot(s) {uncovered} under {out_dir} have no partition-"
+            "plan rows (encoded before lookup support) — lookups against "
+            "them would silently miss their docs; re-encode those inputs "
+            "(a resumed no-op run backfills the plan), or decode fully "
+            "and filter"
+        )
+    # Spark's own xxhash64, evaluated on the driver: an Arrow-backed local
+    # relation's projection is folded without launching a job
+    ids = pa.table({"doc_id": pa.array(list(map(str, doc_ids)), pa.string())})
+    hashes = spark.createDataFrame(ids).select(F.xxhash64("doc_id")).collect()
+    return sorted(
+        {
+            p["offset"] + h % p["salts"]  # Python % is pmod for salts > 0
+            for p in plan
+            # uniform plans carry source=NULL and match any doc
+            if source is None or p["source"] in (source, None)
+            for (h,) in hashes
+        }
+    )
 
 
 def candidate_parts(
@@ -255,54 +326,8 @@ def candidate_parts(
     snapshot.  Coverage is validated against the manifest and a missing
     snapshot raises the same backfill error as a missing plan directory.
     """
-    ppath = plan_path(out_dir)
-    try:
-        plan = (
-            spark.read.parquet(ppath)
-            .select("snapshot_id", "source", "offset", "salts")
-            .distinct()
-        )
-    except Exception:
-        raise FileNotFoundError(
-            f"no partition plan under {out_dir} — the store predates "
-            "lookup support; re-encode with --no-resume (a resumed no-op "
-            "run also backfills the plan), or decode fully and filter"
-        ) from None
-    plan_snaps = {
-        r["snapshot_id"]
-        for r in plan.select("snapshot_id").distinct().collect()
-    }
-    uncovered = sorted(
-        _decoded_snapshot_ids(spark, out_dir, snapshots) - plan_snaps
-    )
-    if uncovered:
-        raise FileNotFoundError(
-            f"snapshot(s) {uncovered} under {out_dir} have no partition-"
-            "plan rows (encoded before lookup support) — lookups against "
-            "them would silently miss their docs; re-encode those inputs "
-            "(a resumed no-op run backfills the plan), or decode fully "
-            "and filter"
-        )
-    if source is not None:
-        # uniform plans carry source=NULL and match any doc
-        plan = plan.filter(
-            (F.col("source") == source) | F.col("source").isNull()
-        )
-    ids = spark.createDataFrame(
-        [(str(d),) for d in dict.fromkeys(doc_ids)], "doc_id string"
-    )
-    cand = (
-        ids.crossJoin(plan)
-        .select(
-            (
-                F.col("offset") + F.pmod(F.xxhash64("doc_id"), F.col("salts"))
-            )
-            .cast("int")
-            .alias("part_id")
-        )
-        .distinct()
-    )
-    return sorted(r["part_id"] for r in cand.collect())
+    rows = _snapshot_rows(spark, out_dir, snapshots)
+    return _candidates(spark, out_dir, rows, doc_ids, source)
 
 
 def lookup_docs(
@@ -322,9 +347,9 @@ def lookup_docs(
     P (the hash-partitioned answer to what zone maps do for range-
     partitioned stores).  Candidate part ids across snapshots are unioned
     (a part id needed for one snapshot also selects the same id in
-    others — superset, filtered by the doc-id semi-join below, so the
-    result is exact).  ``doc_ids`` is broadcast: point lookups are by
-    definition metadata-sized; for bulk id sets use a decode + join.
+    others — superset, filtered by the doc-id IN filter below, so the
+    result is exact).  Point lookups are by definition metadata-sized;
+    for bulk id sets use a decode + join.
     ``source`` (when every requested id comes from that source) collapses
     candidates to one partition per (doc, plan).  ``parts`` lets a caller
     that already ran :func:`candidate_parts` skip recomputing them.
@@ -332,15 +357,11 @@ def lookup_docs(
     cols = columns
     if cols is not None and "doc_id" not in cols:
         cols = ["doc_id", *cols]
+    rows = _snapshot_rows(spark, out_dir, snapshots)
     if parts is None:
-        parts = candidate_parts(
-            spark, out_dir, doc_ids, source=source, snapshots=snapshots
-        )
-    decoded = decode_token_table(spark, out_dir, snapshots, cols, parts=parts)
-    ids = spark.createDataFrame(
-        [(str(d),) for d in dict.fromkeys(doc_ids)], "doc_id string"
-    )
-    out = decoded.join(F.broadcast(ids), "doc_id", "left_semi")
+        parts = _candidates(spark, out_dir, rows, doc_ids, source)
+    decoded = _decode(spark, out_dir, rows, cols, parts)
+    out = decoded.filter(F.col("doc_id").isin(list(map(str, doc_ids))))
     return out.select(*columns) if columns is not None else out
 
 

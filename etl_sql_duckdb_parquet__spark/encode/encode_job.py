@@ -2,36 +2,39 @@
 
 DataFrame program (SURVEY.md §7.0a):
 
-1. :func:`plan_partitions` — EXPLICIT partition assignment.  Default mode is
+1. :func:`input_stats` — one aggregate pass: per-source token shares and
+   the content fingerprint (snapshot id) of the input.
+2. :func:`plan_partitions` — EXPLICIT partition assignment.  Default mode is
    source-aware + salted: partitions are source-homogeneous (same-source
    token streams share statistics → better codec fits), and each source gets
    ``ceil(source_tokens / target_tokens)`` salt buckets keyed by
    ``xxhash64(doc_id)`` — a 70%-hot source is split across proportionally
    many partitions instead of melting one executor.  This is the skew
    handling the AQE can't do for groupBy-aggregate workloads.
-2. One ``groupBy(part_id).applyInPandas`` — the single shuffle of the job.
-   Inside the UDF everything is vectorized numpy over Arrow batches
-   (no per-row Python; reference's only per-row op, the row hash at
-   ``src/etl/ingest.py:56-58``, is replaced by vectorized checksums).
-3. Blobs written as uncompressed Parquet (our codecs ARE the compression;
-   a codec on top would contaminate the size measurement), partitioned by
-   run so re-runs never collide; manifest rows appended per partition.
+3. :func:`encode_sink_frame` — ``repartition(part_id)`` (the single shuffle
+   of the job), then a streaming ``mapInArrow`` kernel: vectorized numpy
+   over Arrow batches, a light codec per column plus a zstd entropy wrap
+   where it wins.  Blobs are written as uncompressed Parquet (our codecs
+   ARE the compression), partitioned by run so re-runs never collide.
+4. Commit: the run's per-partition ``meta`` is collected once on the
+   driver; the manifest rows, the empty-partition rows and the returned
+   totals all derive from it, appended as one file.
 
-Resume: planned parts are anti-joined against the manifest before encoding
-(only missing/failed partitions run), making the job idempotent per input
-snapshot — kill it anywhere and re-run.
+Resume: the manifest's rows are read once on the driver and the planned
+part ids already committed for this input snapshot are filtered out
+before encoding (only missing/failed partitions run), making the job
+idempotent per input snapshot — kill it anywhere and re-run.
 """
 
 from __future__ import annotations
 
+import datetime
 import json
 import math
-import os
 import time
 import uuid
 
 import numpy as np
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,11 +42,15 @@ from ..codecs import encode_strings
 from ..codecs.core import encode_int_best, encode_int_best_with_stats
 from ..codecs.core import CODEC_IDS, codec_of, zunwrap, zwrap_best
 from .manifest import (
-    append_manifest,
+    MANIFEST_SCHEMA,
+    PLAN_SCHEMA,
+    append_rows,
     append_running_marker,
     blobs_path,
-    completed_parts,
+    manifest_path,
     plan_path,
+    read_manifest,
+    read_parquet_or_none,
 )
 
 DEFAULT_TARGET_TOKENS = 2_000_000
@@ -53,22 +60,18 @@ DEFAULT_TARGET_TOKENS = 2_000_000
 # metadata) across millions of files at 100 TB scale
 ENCODED_SCHEMA = "part_id int, tokens_blob binary, lengths_blob binary, docids_blob binary, sources_blob binary, meta string"
 
-META_SCHEMA = (
-    "codec string, n_docs long, n_tokens long, raw_bytes long, "
-    "comp_bytes long, encode_s double, checksum long, "
-    "n_distinct long, n_runs long, vmin long, vmax long"
-)
-
 
 def input_stats(df: DataFrame) -> tuple[list, str]:
     """ONE aggregation pass over the input: per-source token shares (for
     the partition plan) + the content-addressed snapshot fingerprint.
 
     At 100 TB a full input scan is the dominant cost — folding the
-    snapshot hash (``manifest.snapshot_id_of`` semantics: count, token
-    sum, xor of per-doc hashes — all decomposable) into the planning
-    aggregate means the job scans the input exactly twice total
-    (plan+snapshot, then encode) instead of three times.
+    snapshot hash (count, token sum, xor of per-doc content hashes — all
+    decomposable) into the planning aggregate means the job scans the
+    input exactly twice total (plan+snapshot, then encode) instead of
+    three times.  The per-doc hash covers the token array itself, so a
+    re-encode of the same ids and lengths with different tokens is a new
+    snapshot, never a resume-skip that would keep serving the old tokens.
 
     NULL contract: the same pass rejects NULL ``source``/``doc_id``/
     ``tokens``/``n_tok`` rows with a clear error.  Silently they would be
@@ -83,7 +86,7 @@ def input_stats(df: DataFrame) -> tuple[list, str]:
         .agg(
             F.sum("n_tok").alias("tok"),
             F.count("*").alias("n"),
-            F.expr("bit_xor(xxhash64(doc_id, n_tok))").alias("h"),
+            F.expr("bit_xor(xxhash64(doc_id, n_tok, tokens))").alias("h"),
             F.sum(F.col("doc_id").isNull().cast("long")).alias("_null_id"),
             F.sum(F.col("tokens").isNull().cast("long")).alias("_null_tok"),
             F.sum(F.col("n_tok").isNull().cast("long")).alias("_null_n"),
@@ -329,47 +332,23 @@ def _append_plan_rows(
 ) -> None:
     """Persist the (source → offset/salts) plan beside the manifest.
 
-    Driver-side pyarrow for filesystem paths — the rows are
-    metadata-sized and a Spark write job costs ~1 s of fixed overhead
-    per encode run; remote URIs (s3a:// etc.) go through a Spark write.
-    Both paths emit the identical schema (int32 offset/salts) so mixed
-    stores read back without a merge conflict.
-
+    Metadata-sized rows, written through :func:`manifest.append_rows`
+    (driver-side on filesystem stores, a Spark append on remote URIs).
     The local file is named by SNAPSHOT (the plan is a pure function of
     snapshot + plan params), so re-runs and resumed no-op runs overwrite
     with identical content instead of accumulating duplicates — which is
     also what lets the fully-resumed path backfill plans for stores
     encoded before this feature existed.  (The remote branch appends a
-    part file per run instead; ``candidate_parts`` reads the plan
-    through ``.distinct()``, so duplicates only cost bytes.)
+    part file per run instead; candidates are a set per snapshot, so
+    duplicates only cost bytes.)
     """
-    ppath = plan_path(out_dir)
-    if "://" not in ppath or ppath.startswith("file:"):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        local = ppath[len("file:"):] if ppath.startswith("file:") else ppath
-        os.makedirs(local, exist_ok=True)
-        tbl = pa.table(
-            {
-                "run_id": pa.array([run_id] * len(plan_rows), pa.string()),
-                "snapshot_id": pa.array(
-                    [snapshot_id] * len(plan_rows), pa.string()
-                ),
-                "source": pa.array([s for s, _, _ in plan_rows], pa.string()),
-                "offset": pa.array([o for _, o, _ in plan_rows], pa.int32()),
-                "salts": pa.array([k for _, _, k in plan_rows], pa.int32()),
-            }
-        )
-        pq.write_table(
-            tbl, os.path.join(local, f"plan-{snapshot_id}.parquet")
-        )
-        return
-    spark.createDataFrame(
-        [(run_id, snapshot_id, s, o, k) for s, o, k in plan_rows],
-        "run_id string, snapshot_id string, source string, "
-        "offset int, salts int",
-    ).coalesce(1).write.mode("append").parquet(ppath)
+    rows = [
+        {"run_id": run_id, "snapshot_id": snapshot_id, "source": s,
+         "offset": o, "salts": k}
+        for s, o, k in plan_rows
+    ]
+    name = f"plan-{snapshot_id}"
+    append_rows(spark, plan_path(out_dir), PLAN_SCHEMA, rows, name)
 
 
 def encode_sink_frame(
@@ -437,6 +416,22 @@ def encode_token_table(
     if snapshot_salt is not None:
         snapshot_id = f"{snapshot_id}-{snapshot_salt}"
 
+    done_ids: set[int] = set()
+    pending = planned
+    if resume:
+        # read BEFORE any store write, so a corrupt manifest fails the run
+        # with nothing appended
+        manifest = read_manifest(spark, out_dir)
+        done_ids = {
+            r["part_id"]
+            for r in (manifest.collect() if manifest is not None else [])
+            if r["snapshot_id"] == snapshot_id and r["status"] == "ok"
+        }
+        if done_ids:
+            done = sorted(done_ids)
+            pending = planned.filter(~F.col("part_id").isin(done))
+    skipped = len(done_ids)
+
     # persist the doc→partition mapping up front (metadata-sized: one row
     # per source) so point lookups can target candidate partitions
     # (decode_job.lookup_docs).  Before the encode work AND on the
@@ -446,17 +441,6 @@ def encode_token_table(
     # the file is keyed by snapshot id.
     if n_parts > 0:
         _append_plan_rows(spark, run_id, snapshot_id, plan_rows, out_dir)
-
-    done_ids: set[int] = set()
-    pending = planned
-    if resume:
-        done = completed_parts(spark, out_dir, snapshot_id)
-        if done is not None:
-            # metadata-sized (O(parts)); the id set also feeds the
-            # empty-partition backfill below
-            done_ids = {r["part_id"] for r in done.collect()}
-            pending = planned.join(F.broadcast(done), "part_id", "left_anti")
-    skipped = len(done_ids)
 
     # same snapshot id ⇒ same data AND same plan parameters ⇒ same plan, so
     # "all planned parts already in the manifest" decides completion without
@@ -489,105 +473,55 @@ def encode_token_table(
         .parquet(blobs_path(out_dir))
     )
 
-    # derive manifest rows from the blobs just written (single encode pass —
-    # no recompute, no cache): read ONLY this run's blob directory — a
-    # whole-tree read would re-list every historical run's files (O(store)
-    # metadata I/O per encode on an object store) just to filter them out
-    # one small row per partition (meta column only — parquet column
-    # pruning skips the blob bytes); cached because both the manifest
-    # write and the totals aggregation consume it
-    try:
-        written = (
-            spark.read.parquet(f"{blobs_path(out_dir)}/run_id={run_id}")
-            .select("part_id", F.from_json("meta", META_SCHEMA).alias("m"))
-            .select("part_id", "m.*")
-            .cache()
-        )
-        written.count()
-    except AnalysisException as e:
-        # A run whose pending parts were ALL empty writes no blob rows, so
-        # its run_id= directory never materializes — and ONLY that case may
-        # take the empty fallback.  Any other failure (transient FS error,
-        # corrupt footer, executor death) must re-raise: swallowing it here
-        # would let the empty-partition backfill below durably commit
-        # status='ok' codec='empty' manifest rows for partitions that DO
-        # hold data — silent loss that resume then treats as complete.
-        if (e.getCondition() or "") != "PATH_NOT_FOUND":
-            raise
-        written = spark.createDataFrame(
-            [], f"part_id int, {META_SCHEMA}"
-        ).cache()
-    manifest_rows = written.select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(snapshot_id).alias("snapshot_id"),
-        "part_id",
-        "codec",
-        "n_docs",
-        "n_tokens",
-        "raw_bytes",
-        "comp_bytes",
-        "encode_s",
-        "checksum",
-        "n_distinct",
-        "n_runs",
-        "vmin",
-        "vmax",
-        F.lit("ok").alias("status"),
-        F.current_timestamp().alias("finished_at"),
-    )
-    append_manifest(manifest_rows, out_dir)
-
+    # Commit: collect this run's per-partition meta ONCE (one small row per
+    # partition; parquet column pruning skips the blob bytes) from ONLY
+    # this run's blob directory — a whole-tree read would re-list every
+    # historical run's files.  A run whose pending parts were ALL empty
+    # writes no blob rows, so its directory never materializes: only that
+    # PATH_NOT_FOUND reads as "nothing written"; any other failure
+    # re-raises, since swallowing it would commit status='ok'
+    # codec='empty' rows for partitions that DO hold data.
+    run_dir = f"{blobs_path(out_dir)}/run_id={run_id}"
+    written = read_parquet_or_none(spark, run_dir, "part_id int, meta string")
+    metas = {
+        r["part_id"]: json.loads(r["meta"])
+        for r in (written.collect() if written is not None else [])
+    }
     # A planned partition can legitimately receive ZERO docs (a salted hot
     # source whose few doc-id hashes don't cover every salt bucket).  The
     # kernel yields no blob row for it, so without a manifest row resume
     # would re-plan it forever: skipped < n_parts on every re-run, each
     # appending a new running marker that never commits — permanently
     # blocking vacuum/compact.  Commit empty partitions as zero-row ok
-    # facts instead (no blob; decode's inner join to blobs skips them).
-    written_ids = {r["part_id"] for r in written.select("part_id").collect()}
-    empty_ids = sorted(set(range(n_parts)) - done_ids - written_ids)
-    if empty_ids:
-        empties = spark.createDataFrame(
-            [(p,) for p in empty_ids], "part_id int"
-        ).select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(snapshot_id).alias("snapshot_id"),
-            "part_id",
-            F.lit("empty").alias("codec"),
-            F.lit(0).cast("long").alias("n_docs"),
-            F.lit(0).cast("long").alias("n_tokens"),
-            F.lit(0).cast("long").alias("raw_bytes"),
-            F.lit(0).cast("long").alias("comp_bytes"),
-            F.lit(0.0).alias("encode_s"),
-            F.lit(0).cast("long").alias("checksum"),
-            *[
-                F.lit(None).cast("long").alias(c)
-                for c in ("n_distinct", "n_runs", "vmin", "vmax")
-            ],
-            F.lit("ok").alias("status"),
-            F.current_timestamp().alias("finished_at"),
-        )
-        append_manifest(empties, out_dir)
+    # facts instead (no blob; decode's blob filter never names them).
+    empty_ids = sorted(set(range(n_parts)) - done_ids - set(metas))
+    commit = {
+        "run_id": run_id,
+        "snapshot_id": snapshot_id,
+        "status": "ok",
+        "finished_at": datetime.datetime.now(datetime.timezone.utc),
+    }
+    zeros = ("n_docs", "n_tokens", "raw_bytes", "comp_bytes", "checksum")
+    empty = {"codec": "empty", "encode_s": 0.0, **dict.fromkeys(zeros, 0)}
+    rows = [{**m, **commit, "part_id": p} for p, m in metas.items()]
+    rows += [{**empty, **commit, "part_id": p} for p in empty_ids]
+    # unique name: a caller-chosen run_id may commit more than once
+    name = f"commit-{run_id}-{uuid.uuid4().hex[:8]}"
+    append_rows(spark, manifest_path(out_dir), MANIFEST_SCHEMA, rows, name)
 
-    agg = written.agg(
-        F.count("*").alias("parts"),
-        F.sum("n_docs").alias("docs"),
-        F.sum("n_tokens").alias("tokens"),
-        F.sum("raw_bytes").alias("raw"),
-        F.sum("comp_bytes").alias("comp"),
-        F.sum("encode_s").alias("cpu_s"),
-    ).first()
-    written.unpersist()
+    def total(k):
+        return sum(m[k] for m in metas.values())
+
     return {
         "run_id": run_id,
         "snapshot_id": snapshot_id,
         "n_parts_planned": n_parts,
         "n_parts_skipped_resume": skipped,
         "n_parts_empty": len(empty_ids),
-        "n_parts_encoded": agg["parts"] or 0,
-        "n_docs": agg["docs"] or 0,
-        "n_tokens": agg["tokens"] or 0,
-        "raw_bytes": agg["raw"] or 0,
-        "comp_bytes": agg["comp"] or 0,
-        "encode_cpu_s": agg["cpu_s"] or 0.0,
+        "n_parts_encoded": len(metas),
+        "n_docs": total("n_docs"),
+        "n_tokens": total("n_tokens"),
+        "raw_bytes": total("raw_bytes"),
+        "comp_bytes": total("comp_bytes"),
+        "encode_cpu_s": float(total("encode_s")),
     }

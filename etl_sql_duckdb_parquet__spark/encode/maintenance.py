@@ -13,8 +13,10 @@ reshaped for the snapshot/manifest store.
 
 Scale design: compaction is just decode→encode — both ends are the
 distributed mapInArrow engine, no driver data path; vacuum touches only
-metadata (the manifest) plus directory deletes.  Readers must still be
-quiesced (same contract as Iceberg's ``expire_snapshots``), but writers
+metadata (the manifest) plus directory deletes.  Every guard below is
+plain Python over manifest rows read once on the driver per call (the
+mid-vacuum marker re-check is a second, fresh read).  Readers must still
+be quiesced (same contract as Iceberg's ``expire_snapshots``), but writers
 are guarded: every encode run appends a ``status='running'`` manifest
 marker before moving blob bytes, and vacuum refuses (without ``force``,
 which also clears stale markers) while ANY uncommitted run exists — an
@@ -33,11 +35,17 @@ import os
 import shutil
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-from .decode_job import decode_token_table
+from .decode_job import _decode
 from .encode_job import DEFAULT_TARGET_TOKENS, encode_token_table
-from .manifest import blobs_path, manifest_path, plan_path, read_manifest
+from .manifest import (
+    MANIFEST_SCHEMA,
+    blobs_path,
+    manifest_path,
+    plan_path,
+    read_manifest,
+    write_rows_file,
+)
 
 
 def _require_filesystem(out_dir: str) -> str:
@@ -52,6 +60,31 @@ def _require_filesystem(out_dir: str) -> str:
 
 def _is_compacted(snapshot_id: str) -> bool:
     return snapshot_id.endswith("-compact")
+
+
+def _manifest_rows(spark: SparkSession, out_dir: str) -> list:
+    """Every manifest row, collected on the driver (metadata-sized)."""
+    manifest = read_manifest(spark, out_dir)
+    if manifest is None:
+        raise FileNotFoundError(f"no manifest under {out_dir}")
+    return manifest.collect()
+
+
+def _inflight(rows: list) -> list[str]:
+    """Runs with a running marker and no committed rows.  ANY such run
+    counts — marker timestamps are run-START times, so comparing them
+    against a commit time would miss a long-running encode that started
+    earlier (and is still writing blobs).  The cost is that a crashed
+    run's stale marker blocks vacuum until force=True; that is the safe
+    direction."""
+    committed = {r["run_id"] for r in rows if r["status"] == "ok"}
+    return sorted(
+        {
+            r["run_id"]
+            for r in rows
+            if r["status"] == "running" and r["run_id"] not in committed
+        }
+    )
 
 
 def compact_store(
@@ -78,20 +111,10 @@ def compact_store(
     markers — so the auto-vacuum can't fail afterwards and strand the
     store in that half-compacted state.
     """
-    manifest = read_manifest(spark, out_dir)
-    if manifest is None:
-        raise FileNotFoundError(f"no manifest under {out_dir}")
-    rows = manifest.select("run_id", "snapshot_id", "status").collect()
+    rows = _manifest_rows(spark, out_dir)
     if vacuum:
         _require_filesystem(out_dir)
-        committed = {r["run_id"] for r in rows if r["status"] == "ok"}
-        pre_inflight = sorted(
-            {
-                r["run_id"]
-                for r in rows
-                if r["status"] == "running" and r["run_id"] not in committed
-            }
-        )
+        pre_inflight = _inflight(rows)
         if pre_inflight:
             raise RuntimeError(
                 f"uncommitted encode run(s) {pre_inflight} exist under "
@@ -100,19 +123,14 @@ def compact_store(
                 "crashed markers with vacuum_store(force=True), or compact "
                 "with vacuum=False"
             )
-    # one metadata job: per-snapshot FIRST- and LAST-commit times, from
-    # which the snapshot list also derives
-    snap_ts = (
-        manifest.filter(F.col("status") == "ok")
-        .groupBy("snapshot_id")
-        .agg(
-            F.min("finished_at").alias("born"),
-            F.max("finished_at").alias("last"),
-        )
-        .collect()
-    )
-    birth_ts = {r["snapshot_id"]: r["born"] for r in snap_ts}
-    last_ts = {r["snapshot_id"]: r["last"] for r in snap_ts}
+    # per-snapshot FIRST- and LAST-commit times, from which the snapshot
+    # list also derives
+    ok = [r for r in rows if r["status"] == "ok"]
+    birth_ts, last_ts = {}, {}
+    for r in ok:
+        sid, t = r["snapshot_id"], r["finished_at"]
+        birth_ts[sid] = min(birth_ts.get(sid, t), t)
+        last_ts[sid] = max(last_ts.get(sid, t), t)
     snaps = sorted(birth_ts)
     if len(snaps) <= 1:
         return {"compacted": False, "n_snapshots": len(snaps)}
@@ -152,7 +170,7 @@ def compact_store(
             "double-counts in this state and re-compacting would encode "
             f"the doubled union; {remedy}"
         )
-    union = decode_token_table(spark, out_dir, snapshots="all")
+    union = _decode(spark, out_dir, ok, None)  # every snapshot, same rows
     stats = encode_token_table(
         spark,
         union,
@@ -208,12 +226,7 @@ def vacuum_store(
     re-renaming.
     """
     local = _require_filesystem(out_dir)
-    manifest = read_manifest(spark, out_dir)
-    if manifest is None:
-        raise FileNotFoundError(f"no manifest under {out_dir}")
-    rows = manifest.select(
-        "run_id", "snapshot_id", "status", "finished_at"
-    ).collect()  # metadata-sized: O(partitions) rows
+    rows = _manifest_rows(spark, out_dir)
     ok_rows = [r for r in rows if r["status"] == "ok"]
     if not ok_rows:
         raise ValueError(f"no status='ok' manifest rows under {out_dir}")
@@ -229,20 +242,7 @@ def vacuum_store(
             "from decode(snapshots='all'); run compact_store() instead, or "
             "vacuum_store(force=True) if the latest truly supersedes them"
         )
-    committed = {r["run_id"] for r in ok_rows}
-    # ANY running marker without committed rows counts as in-flight —
-    # marker timestamps are run-START times, so comparing them against
-    # the kept snapshot's commit time would miss a long-running encode
-    # that started before the kept snapshot committed (and is still
-    # writing blobs).  The cost is that a crashed run's stale marker
-    # blocks vacuum until force=True; that is the safe direction.
-    inflight = sorted(
-        {
-            r["run_id"]
-            for r in rows
-            if r["status"] == "running" and r["run_id"] not in committed
-        }
-    )
+    inflight = _inflight(rows)
     if inflight and not force:
         raise RuntimeError(
             f"uncommitted encode run(s) {inflight} exist under {out_dir} — "
@@ -263,16 +263,15 @@ def vacuum_store(
     # milliseconds between this read and the rename below, which — like
     # Iceberg's expire_snapshots — is a documented quiesce requirement,
     # not a guarantee this filesystem store can provide.
-    late = (
-        read_manifest(spark, out_dir)
-        .filter(
-            (F.col("status") == "running")
-            & ~F.col("run_id").isin(sorted(committed))
-        )
-        .select("run_id")
-        .collect()
-    )
-    late_ids = sorted({r["run_id"] for r in late} - set(inflight))
+    # (a run that started AND committed in between counts too: the rewrite
+    # below keeps only first-read rows, so its commit would be dropped)
+    committed = {r["run_id"] for r in ok_rows}
+    late = {
+        r["run_id"]
+        for r in _manifest_rows(spark, out_dir)
+        if r["status"] == "running" and r["run_id"] not in committed
+    }
+    late_ids = sorted(late - set(inflight))
     if late_ids and not force:
         raise RuntimeError(
             f"encode run(s) {late_ids} started while this vacuum was "
@@ -295,10 +294,12 @@ def vacuum_store(
     # (the in-flight guard above, or force), and committed runs' markers
     # serve no further purpose — carrying them through the rewrite would
     # leave permanent cruft every manifest reader must filter.
-    survivors = manifest.filter(
-        (F.col("snapshot_id") == snap) & (F.col("status") != "running")
-    )
-    survivors.coalesce(1).write.mode("overwrite").parquet(tmp)
+    survivors = [
+        r.asDict()
+        for r in rows
+        if r["snapshot_id"] == snap and r["status"] != "running"
+    ]
+    write_rows_file(tmp, MANIFEST_SCHEMA, survivors, "part-vacuum")
     os.rename(mpath, old)
     os.rename(tmp, mpath)
     shutil.rmtree(old)
@@ -321,7 +322,7 @@ def vacuum_store(
         n_deleted += 1
 
     # drop other snapshots' plan files (Spark-written part files from
-    # remote-era appends are left for read-side distinct() to dedupe)
+    # remote-era appends are left: readers select plan rows by snapshot)
     pdir = plan_path(local)
     if os.path.isdir(pdir):
         for entry in os.listdir(pdir):

@@ -294,16 +294,264 @@ def test_compression_beats_reference_parquet_zstd(spark, tmp_path):
 
 def test_input_stats_single_pass_matches_snapshot_id(spark, token_df):
     """input_stats folds the snapshot fingerprint into the planning
-    aggregate; it must equal the standalone manifest fingerprint."""
+    aggregate; it must equal the same fingerprint taken as one whole-table
+    aggregate (count, token sum, xor of per-doc content hashes)."""
     from etl_sql_duckdb_parquet__spark.encode.encode_job import input_stats
-    from etl_sql_duckdb_parquet__spark.encode.manifest import snapshot_id_of
 
     shares, snap = input_stats(token_df)
-    assert snap == snapshot_id_of(token_df)
+    n, s, h = token_df.select(
+        F.count("*"),
+        F.sum("n_tok"),
+        F.expr("bit_xor(xxhash64(doc_id, n_tok, tokens))"),
+    ).first()
+    assert snap == f"snap_{n}_{s}_{h & 0xFFFFFFFFFFFF:012x}"
     assert sum(r["n"] for r in shares) == token_df.count()
     assert {r["source"] for r in shares} == {
         r["source"] for r in token_df.select("source").distinct().collect()
     }
+
+
+def test_changed_tokens_are_a_new_snapshot(spark, tmp_path):
+    """Same ids and lengths, different tokens: the fingerprint covers the
+    token arrays, so the re-encode is a new snapshot (not a resume-skip)
+    and the latest decode serves the new tokens."""
+    a = synth_token_table(spark, 400, avg_len=16, seed=21)
+    b = a.withColumn("tokens", F.transform("tokens", lambda t: t + 1))
+    out = str(tmp_path / "enc_changed")
+    first = encode_token_table(spark, a, out, target_tokens=2_000)
+    second = encode_token_table(spark, b, out, target_tokens=2_000)
+    assert second["snapshot_id"] != first["snapshot_id"]
+    assert second["n_parts_skipped_resume"] == 0
+    v = verify_roundtrip(b, decode_token_table(spark, out))
+    assert v["ok"] and v["n_union"] == 400, v
+
+
+def test_corrupt_manifest_fails_loudly(spark, tmp_path):
+    """A manifest file that is not parquet must fail encode and decode —
+    never read as an empty store (resume would re-encode everything and
+    decode would report no manifest) — and nothing may be appended.  Both
+    one garbage file beside valid ones and an all-garbage manifest."""
+    import os
+
+    from py4j.protocol import Py4JJavaError
+
+    df = synth_token_table(spark, 300, avg_len=16, seed=22)
+    out = str(tmp_path / "enc_corrupt")
+    encode_token_table(spark, df, out, target_tokens=2_000)
+    mdir = os.path.join(out, "manifest")
+    valid = [f for f in os.listdir(mdir) if f.endswith(".parquet")]
+
+    def listing():
+        return sorted((d, sorted(fs)) for d, _sub, fs in os.walk(out))
+
+    for garbage in (["part-garbage.parquet"], valid):
+        for name in garbage:
+            with open(os.path.join(mdir, name), "wb") as f:
+                f.write(b"not a parquet file" * 8)
+        before = listing()
+        for call in (
+            lambda: encode_token_table(spark, df, out, target_tokens=2_000),
+            lambda: decode_token_table(spark, out).count(),
+        ):
+            with pytest.raises(Py4JJavaError, match="FAILED_READ_FILE"):
+                call()
+        assert listing() == before
+
+
+def _job_count(spark, fn) -> int:
+    """Spark jobs launched by ``fn()``, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job_budget_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_store_calls_job_budget(spark, tmp_path):
+    """Store metadata is planned on the driver from one manifest (and plan)
+    read per call, so each call's Spark jobs are the metadata read plus
+    its real data work — no window, join or inference jobs."""
+    from etl_sql_duckdb_parquet__spark.encode import (
+        compact_store,
+        lookup_docs,
+    )
+
+    df = synth_token_table(spark, 2000, avg_len=32, seed=23).cache()
+    df.count()
+    epoch = F.pmod(F.xxhash64("doc_id"), F.lit(8))
+    one, eight = str(tmp_path / "jobs_one"), str(tmp_path / "jobs_eight")
+    encode_token_table(spark, df, one, target_tokens=20_000)
+    for e in range(7):
+        encode_token_table(
+            spark, df.filter(epoch == e), eight, target_tokens=20_000,
+            snapshot_salt=f"epoch{e}",
+        )
+    assert _job_count(
+        spark,
+        lambda: encode_token_table(
+            spark, df.filter(epoch == 7), eight, target_tokens=20_000,
+            snapshot_salt="epoch7",
+        ),
+    ) <= 9
+
+    def consume(store, snapshots):
+        decode_token_table(spark, store, snapshots=snapshots).agg(
+            F.count("doc_id"), F.sum(F.size("tokens")), F.sum("n_tok"),
+            F.count("source"),
+        ).first()
+
+    assert _job_count(spark, lambda: consume(one, "latest")) <= 3
+    assert _job_count(spark, lambda: consume(eight, "all")) <= 3
+
+    ids = [r["doc_id"] for r in df.select("doc_id").limit(3).collect()]
+    got = []
+
+    def lookup():
+        got.extend(lookup_docs(spark, eight, ids, snapshots="all").collect())
+
+    assert _job_count(spark, lookup) <= 4
+    assert sorted(r["doc_id"] for r in got) == sorted(ids)
+
+    assert _job_count(spark, lambda: compact_store(spark, eight)) <= 18
+    v = verify_roundtrip(df, decode_token_table(spark, eight))
+    assert v["ok"] and v["n_union"] == 2000, v
+    df.unpersist()
+
+
+def test_many_runs_store_decodes_and_looks_up(spark, tmp_path):
+    """A manifest listing ≥1,000 committed runs must decode and look up
+    exactly: the blob filter stays flat (IN lists), where a per-run OR
+    chain would nest one Catalyst level per run and break.  The store is
+    written driver-side with the encode kernel — one run per partition
+    of a ~1,200-partition uniform plan."""
+    import datetime
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_sql_duckdb_parquet__spark.encode import lookup_docs
+    from etl_sql_duckdb_parquet__spark.encode.encode_job import (
+        _append_plan_rows,
+        _encode_blob_row,
+    )
+    from etl_sql_duckdb_parquet__spark.encode.manifest import (
+        MANIFEST_SCHEMA,
+        blobs_path,
+        manifest_path,
+        write_rows_file,
+    )
+
+    df = synth_token_table(spark, 3000, avg_len=16, seed=24).cache()
+    total = df.agg(F.sum("n_tok")).first()[0]
+    planned, n_parts, plan_rows = plan_partitions(
+        df, target_tokens=total // 1200, by_source=False
+    )
+    out, snap = str(tmp_path / "enc_many"), "snap_many_runs"
+    _append_plan_rows(spark, "run_plan", snap, plan_rows, out)
+    parts: dict[int, list] = {}
+    for r in planned.select("part_id", "doc_id", "tokens", "source").collect():
+        parts.setdefault(r["part_id"], []).append(r)
+    blob_schema = pa.schema(
+        [("part_id", pa.int32())]
+        + [(c, pa.binary()) for c in ("tokens_blob", "lengths_blob")]
+        + [(c, pa.binary()) for c in ("docids_blob", "sources_blob")]
+        + [("meta", pa.string())]
+    )
+    now = datetime.datetime.now(datetime.timezone.utc)
+    rows = []
+    for p, docs in parts.items():
+        run = f"run_{p:04d}"
+        blob = _encode_blob_row(
+            p,
+            np.concatenate([np.asarray(d["tokens"], np.int64) for d in docs]),
+            np.array([len(d["tokens"]) for d in docs], np.int64),
+            [d["doc_id"] for d in docs],
+            [d["source"] for d in docs],
+            0.0,
+        )
+        run_dir = os.path.join(blobs_path(out), f"run_id={run}")
+        os.makedirs(run_dir)
+        pq.write_table(
+            pa.Table.from_pylist([blob], blob_schema),
+            os.path.join(run_dir, "part-0.parquet"),
+        )
+        rows.append(
+            {**json.loads(blob["meta"]), "run_id": run, "snapshot_id": snap,
+             "part_id": p, "status": "ok", "finished_at": now}
+        )
+    write_rows_file(manifest_path(out), MANIFEST_SCHEMA, rows, "many-runs")
+    assert len(rows) >= 1000
+
+    v = verify_roundtrip(df, decode_token_table(spark, out))
+    assert v["ok"] and v["n_union"] == 3000, v
+    ids = [r["doc_id"] for r in df.select("doc_id").limit(3).collect()]
+    want = sorted(
+        (r["doc_id"], list(r["tokens"]))
+        for r in df.filter(F.col("doc_id").isin(ids)).collect()
+    )
+    got = sorted(
+        (r["doc_id"], list(r["tokens"]))
+        for r in lookup_docs(spark, out, ids).collect()
+    )
+    assert got == want and len(got) == 3
+    df.unpersist()
+
+
+def test_snapshot_argument_edges(spark, tmp_path):
+    """A pinned non-latest snapshot decodes and looks up exactly that
+    snapshot; a typo'd id, an unknown mode and ``None`` raise ValueError;
+    a marker-only manifest has nothing to decode yet still encodes."""
+    from etl_sql_duckdb_parquet__spark.encode import (
+        candidate_parts,
+        lookup_docs,
+    )
+    from etl_sql_duckdb_parquet__spark.encode.manifest import (
+        append_running_marker,
+    )
+
+    a = synth_token_table(spark, 300, avg_len=16, seed=25)
+    b = synth_token_table(spark, 200, avg_len=16, seed=26).withColumn(
+        "doc_id", F.concat(F.lit("b_"), F.col("doc_id"))
+    )
+    out = str(tmp_path / "enc_pinned")
+    first = encode_token_table(spark, a, out, target_tokens=2_000)
+    encode_token_table(spark, b, out, target_tokens=2_000)
+    snap_a = first["snapshot_id"]
+
+    v = verify_roundtrip(a, decode_token_table(spark, out, snapshots=snap_a))
+    assert v["ok"] and v["n_union"] == 300, v
+    ids = [r["doc_id"] for r in a.select("doc_id").limit(2).collect()]
+    pinned = lookup_docs(spark, out, ids, snapshots=snap_a).collect()
+    assert sorted(r["doc_id"] for r in pinned) == sorted(ids)
+    assert lookup_docs(spark, out, ids).count() == 0  # latest is b
+
+    for bad in ("snap_typo", "newest", None):
+        for call in (
+            lambda: decode_token_table(spark, out, snapshots=bad),
+            lambda: lookup_docs(spark, out, ids, snapshots=bad),
+            lambda: candidate_parts(spark, out, ids, snapshots=bad),
+        ):
+            with pytest.raises(ValueError):
+                call()
+
+    marker_only = str(tmp_path / "enc_marker_only")
+    append_running_marker(spark, marker_only, "run_marker_sim", "snap_sim")
+    for snaps in ("latest", "all"):
+        with pytest.raises(ValueError, match="no status='ok'"):
+            decode_token_table(spark, marker_only, snapshots=snaps)
+    stats = encode_token_table(spark, a, marker_only, target_tokens=2_000)
+    assert stats["n_parts_skipped_resume"] == 0
+    v = verify_roundtrip(a, decode_token_table(spark, marker_only))
+    assert v["ok"] and v["n_union"] == 300, v
 
 
 def test_append_mode_decodes_all_snapshots(spark, tmp_path):
